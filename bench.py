@@ -143,7 +143,7 @@ def main() -> None:
     # pay the fresh-JVM costs (codegen/analyzer JIT, Python worker
     # pool, parquet committer classes) on a micro-job, not inside the
     # first timed sample — measured 69-109 s -> 39-53 s cold crawl
-    # (tools/cold_round_profile.py A/B, BENCH.md round 5); disclosed
+    # (cold-round A/B, BENCH.md round 5); disclosed
     # in the JSON as prewarm_s
     t_pw = time.monotonic()
     prewarm(spark)

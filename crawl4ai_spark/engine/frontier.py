@@ -41,16 +41,15 @@ shuffle; the bloom itself is updated every `bloom_sync_rounds` rounds
 (an exact anti-join against the small recent-rounds seen DELTA covers
 the gap, so exact-set semantics hold at every round), sized from the
 live seen count, and rebuilt at a round boundary when outgrown;
-robots/host budgets broadcast; AQE handles residual skew. The
-pre-filter backend is pluggable (seen_filter="bloom"|"cuckoo",
-engine/cuckoo.py — deletion-capable for seen_ttl_rounds recrawl
-scheduling, whose expiry is a metadata-only dir drop on the
-round-partitioned seen table).
+robots/host budgets broadcast; AQE handles residual skew.
+seen_ttl_rounds recrawl scheduling expires seen entries with a
+metadata-only dir drop on the round-partitioned seen table; the bloom
+cannot delete, so an expired URL's stale filter bits are only a
+pre-filter false positive that the exact anti-join resolves.
 """
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
 from typing import Callable, Optional
@@ -86,13 +85,6 @@ class CrawlConfig:
     n_salts: int = 8
     # seen set
     use_bloom: bool = True
-    # pre-filter backend: "bloom" (default — pure vectorized, no
-    # deletion) or "cuckoo" (engine/cuckoo.py — deletion-capable for
-    # TTL/recrawl semantics; insertion is a per-key chain, see module
-    # docstring). Both are exact-set-preserving pre-filters: probe
-    # false positives fall through to the exact anti-join, and neither
-    # can produce a false negative.
-    seen_filter: str = "bloom"
     n_shards: int = 32
     bloom_m_bits: int = 1 << 20              # initial/floor per-shard size
     bloom_k: int = 7
@@ -110,10 +102,8 @@ class CrawlConfig:
     # this many rounds ago EXPIRE at the round close — an expired URL
     # that is rediscovered is crawled again. Expiry is a metadata-only
     # dir drop on the round-partitioned seen table (Iceberg DeleteFiles
-    # shape — no rewrite job); with seen_filter="cuckoo" the expired
-    # hashes are also DELETED from the filter shards (the capability
-    # the bloom lacks — its stale entries cost only pre-filter FPs
-    # until its next rebuild, never correctness).
+    # shape — no rewrite job). The bloom keeps expired hashes; they
+    # cost only pre-filter FPs until its next rebuild, never correctness.
     seen_ttl_rounds: Optional[int] = None
     bloom_headroom: float = 4.0              # growth headroom on (re)build
     # capacity cap: below this `remaining`, exact global top-k
@@ -245,18 +235,10 @@ class CrawlEngine:
         self.t_host = warehouse.table("host_state")
         self.t_metrics = warehouse.table("metrics")
         self.t_bloom = warehouse.table("seen_bloom")
-        if self.cfg.seen_filter == "cuckoo":
-            from crawl4ai_spark.engine.cuckoo import CuckooSeenSet
-
-            # same duck-typed surface (build/add_hashes/probe/capacity/
-            # m_bits); the blob schema differs, hence its own table
-            self.t_bloom = warehouse.table("seen_cuckoo")
-            self.bloom = CuckooSeenSet(self.t_bloom, self.cfg.n_shards)
-        else:
-            self.bloom = BloomSeenSet(
-                self.t_bloom, self.cfg.n_shards, self.cfg.bloom_m_bits,
-                self.cfg.bloom_k
-            )
+        self.bloom = BloomSeenSet(
+            self.t_bloom, self.cfg.n_shards, self.cfg.bloom_m_bits,
+            self.cfg.bloom_k
+        )
         from crawl4ai_spark.engine.adaptive_state import AdaptiveState
 
         self.adaptive_state = AdaptiveState(warehouse)
@@ -399,12 +381,13 @@ class CrawlEngine:
         self._bloom_built = last.get("bloom_built", False)
         self._bloom_synced_round = last.get("bloom_synced_round", -1)
         if self._bloom_built and not self.t_bloom.exists():
-            # checkpoint written under the OTHER filter backend (bloom
-            # vs cuckoo keep separate tables): trusting bloom_built
-            # against an empty table would mark every candidate
-            # definitely-new and bypass the exact anti-join for synced
-            # rounds — a mass re-crawl. Fall back to exact-only dedup;
-            # the filter rebuilds at its engage threshold.
+            # checkpoint says bloom_built but seen_bloom is empty — the
+            # shape of a warehouse written by the removed cuckoo backend,
+            # which kept its shards in its own table. Trusting the flag
+            # would mark every candidate definitely-new and bypass the
+            # exact anti-join for synced rounds — a mass re-crawl. Fall
+            # back to exact-only dedup; the filter rebuilds at its
+            # engage threshold.
             self._bloom_built = False
             self._bloom_synced_round = -1
         self._frontier_count = last.get("frontier_count")
@@ -547,18 +530,6 @@ class CrawlEngine:
     def _run_round(self, rnd: int, frontier: DataFrame, crawled_before: int) -> int:
         cfg = self.cfg
         t0 = time.monotonic()
-        # phase tracing (C4AS_TRACE=1): driver-side wall per round phase,
-        # for separating job time from plan-compile/commit gaps
-        if os.environ.get("C4AS_TRACE") == "1":
-            _last = [t0]
-
-            def _tr(label: str) -> None:
-                now = time.monotonic()
-                print(f"TRACE r{rnd} {label} {now - _last[0]:.2f}s", flush=True)
-                _last[0] = now
-        else:
-            def _tr(label: str) -> None:
-                pass
         frontier = frontier.select(*[f for f, _ in FRONTIER_FIELDS])
         # Parallelism floor for the Python-heavy fetch+extract chain.
         # Spark sizes scan partitions by BYTES, but a frontier row costs
@@ -672,9 +643,7 @@ class CrawlEngine:
             F.sum(F.when(~F.col("success"), 1).otherwise(0)).alias("n_failed"),
             F.expr("percentile_approx(fetch_ms, 0.5)").alias("p50"),
         )
-        _tr("plan_job1")
         self.t_pages.append(round_pages)
-        _tr("job1_pages_write")
         pm = obs_pages.get
         n_total = int(pm["n"] or 0)
         n_failed = int(pm["n_failed"] or 0)
@@ -740,9 +709,7 @@ class CrawlEngine:
             F.sum(F.when(F.col("tag").isin("n", "d"), 1).otherwise(0)).alias("n_frontier"),
         )
         state_dir = self.wh.state_dir(rnd)
-        _tr("plan_job2")
         state.write.partitionBy("tag").mode("overwrite").parquet(state_dir)
-        _tr("job2_state_write")
         sm = obs_state.get
         n_new = int(sm["n_new"] or 0)
         self._frontier_count = int(sm["n_frontier"] or 0)
@@ -765,7 +732,6 @@ class CrawlEngine:
         for df in self._scratch:
             df.unpersist()
         self._scratch.clear()
-        _tr("adopt_unpersist")
 
         # -- seen TTL expiry (recrawl scheduling; default off) --------------
         # The seen table holds exactly one round-stamped dir per round
@@ -781,25 +747,7 @@ class CrawlEngine:
                 if _round_of_dir(d) is not None and _round_of_dir(d) <= cutoff
             ]
             if expired_rel:
-                if self._bloom_built and hasattr(self.bloom, "delete_hashes"):
-                    # delete ONLY rounds the amortized sync has actually
-                    # inserted (round <= _bloom_synced_round). Hashes
-                    # from unsynced expired rounds were never added —
-                    # and never will be, since their dirs drop below —
-                    # and deleting a never-inserted key can strip a live
-                    # key's colliding fingerprint (same 16-bit fp, same
-                    # bucket orbit), the false negative the filter
-                    # contract forbids.
-                    synced = [d for d in expired_rel
-                              if _round_of_dir(d) <= self._bloom_synced_round]
-                    if synced:
-                        exp = self.spark.read.parquet(*[
-                            os.path.join(self.t_seen.path, d) for d in synced
-                        ])
-                        self.bloom.delete_hashes(
-                            self.spark, exp.select("url_hash"))
                 self.t_seen.drop_dirs(expired_rel)
-        _tr("seen_ttl")
 
         # -- bloom maintenance (amortized; exactness never depends on it) --
         # The post-adoption seen read only happens on rounds that will
@@ -831,7 +779,6 @@ class CrawlEngine:
                     delta = seen_now.where(F.col("round") > self._bloom_synced_round)
                     self.bloom.add_hashes(self.spark, delta.select("url_hash"))
                 self._bloom_synced_round = rnd
-        _tr("bloom")
 
         # -- metrics (driver-side pyarrow append — no Spark job) ------------
         wall = time.monotonic() - t0
@@ -869,7 +816,6 @@ class CrawlEngine:
                 },
             }
         )
-        _tr("metrics_commit")
         return crawled
 
     # ------------------------------------------------------------------

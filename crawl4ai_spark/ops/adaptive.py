@@ -36,12 +36,14 @@ def term_stats(df: DataFrame, text_col: str = "text",
 def coverage_score(df: DataFrame, query_terms: list[str],
                    text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Single-row coverage score for a term query against the corpus:
-    sqrt(avg over query terms of (df/N) * (1 + 0.5*log10(1+tf/N)))."""
-    n_docs = df.count()
+    sqrt(avg over query terms of (df/N) * (1 + 0.5*log10(1+tf/N))).
+    N is a one-row aggregate cross-joined into the same plan, so the
+    score runs as one job."""
+    n_docs = df.agg(F.count(F.lit(1)).cast("double").alias("__n"))
     stats = term_stats(df, text_col, id_col).where(F.col("term").isin(query_terms))
-    per_term = stats.select(
-        ((F.col("df") / F.lit(float(n_docs)))
-         * (1.0 + 0.5 * F.log10(1.0 + F.col("tf") / F.lit(float(n_docs))))).alias("s")
+    per_term = stats.crossJoin(n_docs).select(
+        ((F.col("df") / F.col("__n"))
+         * (1.0 + 0.5 * F.log10(1.0 + F.col("tf") / F.col("__n")))).alias("s")
     )
     # terms absent from the corpus contribute 0 -> divide by len(query_terms)
     return per_term.agg(

@@ -63,11 +63,11 @@ def prewarm(spark: SparkSession) -> None:
     """Pay the one-time JVM/Python cold costs on a micro-job, not on
     the first real round.
 
-    The cold-round decomposition (tools/cold_round_profile.py,
-    BENCH.md round 5) shows a fresh JVM's first engine rounds run
-    ~2.5x slower in EVERY phase — driver-side analysis/codegen JIT,
-    whole-stage-codegen class compilation, Python worker pool spinup,
-    shuffle machinery, parquet committer class loading — rather than
+    The cold-round decomposition (BENCH.md round 5) shows a fresh
+    JVM's first engine rounds run ~2.5x slower in EVERY phase —
+    driver-side analysis/codegen JIT, whole-stage-codegen class
+    compilation, Python worker pool spinup, shuffle machinery,
+    parquet committer class loading — rather than
     one slow stage. This exercises each of those paths once at
     trivial data volume (~2-4 s): a codegen aggregation over a
     shuffle, an Arrow-batched pandas-UDF stage, and a parquet

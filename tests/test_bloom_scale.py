@@ -117,3 +117,53 @@ def test_bloom_engages_mid_crawl(spark, tmp_path):
     assert eng_mid.t_bloom.read(spark).count() > 0
     _, got_off = crawl("off", use_bloom=False)
     assert got_mid == got_off
+
+
+def test_resume_with_empty_bloom_table_falls_back_to_exact(spark, tmp_path):
+    """A checkpoint that says bloom_built while seen_bloom holds no
+    shards — the shape a warehouse written by the removed cuckoo
+    backend resumes with, since that backend kept its shards in its own
+    table — must NOT trust the flag: probing an empty filter would mark
+    every synced URL definitely-new and mass re-crawl. The resume guard
+    falls back to exact-only dedup, so the crawled multiset equals a
+    straight-through run's."""
+    import dataclasses
+
+    from crawl4ai_spark.corpus.fakeshop import fakeshop_spark_df
+    from crawl4ai_spark.engine.fetch import CorpusFetcher
+    from crawl4ai_spark.engine.frontier import CrawlConfig, CrawlEngine
+    from crawl4ai_spark.engine.tables import Warehouse
+
+    corpus = fakeshop_spark_df(spark, n_sites=1, n_categories=3,
+                               n_subcats=2, n_products=2)
+    seed = ["http://shop0.fakeshop.test/index.html"]
+    cfg = CrawlConfig(max_depth=3, n_shards=4, bloom_sync_rounds=1,
+                      bloom_min_seen=5)
+
+    def pages_of(eng):
+        return sorted((r.url_norm, r.depth) for r in
+                      eng.t_pages.read(spark)
+                      .select("url_norm", "depth").collect())
+
+    straight = CrawlEngine(spark, Warehouse(str(tmp_path / "s")),
+                           CorpusFetcher(corpus), cfg)
+    straight.run(seed)
+    want = pages_of(straight)
+
+    wh = Warehouse(str(tmp_path / "x"))
+    part = CrawlEngine(spark, wh, CorpusFetcher(corpus),
+                       dataclasses.replace(cfg, max_rounds=2))
+    part.run(seed)
+    assert part._bloom_built  # the checkpoint really says bloom_built
+
+    # empty seen_bloom in the table and in the checkpoint, so the
+    # resume rollback cannot restore the shards
+    wh.table("seen_bloom").rollback_to([])
+    last = wh.read_rounds()[-1]
+    wh.commit_round(dict(last, tables=dict(last["tables"], seen_bloom=[])))
+
+    resumed = CrawlEngine(spark, wh, CorpusFetcher(corpus), cfg)
+    assert resumed.resume_or_init(seed) == (2, last["pages_crawled"])
+    assert not resumed._bloom_built
+    resumed.run(seed)
+    assert pages_of(resumed) == want  # no duplicates, nothing lost

@@ -76,14 +76,15 @@ def test_wire_bytes_arrays_nulls_and_bool_keys(spark, tmp_path):
     serialize as JSON arrays (size-1 included), a null in a long
     column stays null (not the invalid token NaN) and leaves the
     other rows' ints as ints, and a boolean key serializes as
-    str(k) like the reference's producer."""
+    str(k) like the reference's producer — a NULL one drops its row."""
     import json as _json
 
     from crawl4ai_spark.streaming.kafka import kafka_messages
 
     df = spark.createDataFrame(
         [("u1", ["a"], 5, True),
-         ("u2", ["a", "b"], None, False)],
+         ("u2", ["a", "b"], None, False),
+         ("u3", ["c"], 7, None)],
         "url string, links array<string>, n long, flag boolean")
     rows = {r.key: r for r in
             kafka_messages(df, "t", "url", ["links", "n"]).collect()}
@@ -93,9 +94,9 @@ def test_wire_bytes_arrays_nulls_and_bool_keys(spark, tmp_path):
     assert bytes(rows[b"u1"].value) == b'{"links": ["a"], "n": 5}'
     assert v2 == {"links": ["a", "b"], "n": None}
 
-    keys = {bytes(r.key) for r in
-            kafka_messages(df, "t", "flag", ["n"]).collect()}
-    assert keys == {b"True", b"False"}
+    keys = sorted(bytes(r.key) for r in
+                  kafka_messages(df, "t", "flag", ["n"]).collect())
+    assert keys == [b"False", b"True"]  # the NULL-flag row drops
 
 
 def test_mixed_send_paths_share_offset_type(spark, tmp_path):

@@ -4,11 +4,11 @@ Contract pinned here:
   - expiry is a metadata-only dir drop on the round-partitioned seen
     table (no rewrite): an expired URL rediscovered via links is
     crawled AGAIN; without TTL every URL is crawled exactly once.
-  - with seen_filter="cuckoo" the expired hashes are deleted from the
-    filter shards (the deletion capability the bloom lacks); with the
-    bloom backend stale filter entries are only pre-filter FPs —
-    the recrawl semantics are identical (exactness never depends on
-    the pre-filter).
+  - the bloom pre-filter cannot delete, so an expired URL's stale
+    filter entry is only a pre-filter false positive that falls through
+    to the exact anti-join — the recrawl semantics equal the
+    filter-free (use_bloom=False) run's, also while the filter lags the
+    seen table (exactness never depends on the pre-filter).
   - a killed run resumes onto the post-expiry snapshot.
 """
 
@@ -49,8 +49,7 @@ def test_ttl_recrawls_expired_urls(spark, tmp_path):
     # second time (the rediscovery must postdate the expiry — a longer
     # ttl on this shallow corpus expires URLs only after the last page
     # that links to them has already been crawled)
-    eng = _crawl(spark, tmp_path, "ttl", seen_ttl_rounds=1,
-                 use_bloom=True, seen_filter="cuckoo")
+    eng = _crawl(spark, tmp_path, "ttl", seen_ttl_rounds=1)
     pages = eng.t_pages.read(spark)
     by_url = {r.url_norm: r["count"]
               for r in pages.groupBy("url_norm").count()
@@ -66,8 +65,7 @@ def test_ttl_recrawls_expired_urls(spark, tmp_path):
 
 
 def test_no_ttl_crawls_each_url_once(spark, tmp_path):
-    eng = _crawl(spark, tmp_path, "nottl", use_bloom=True,
-                 seen_filter="cuckoo")
+    eng = _crawl(spark, tmp_path, "nottl")
     pages = eng.t_pages.read(spark)
     # the SEED may be re-crawled once (seen starts empty — the
     # documented reference quirk, frontier.init_from_seeds); every
@@ -79,8 +77,9 @@ def test_no_ttl_crawls_each_url_once(spark, tmp_path):
 
 
 def test_ttl_with_bloom_backend_same_semantics(spark, tmp_path):
-    """The bloom backend cannot delete, but recrawl semantics must be
-    identical — stale filter entries only cost exact-anti-join rows."""
+    """The bloom cannot delete, but recrawl semantics must equal the
+    filter-free run's — stale filter entries only cost exact-anti-join
+    rows."""
     def crawled(subdir, **kw):
         eng = _crawl(spark, tmp_path, subdir, seen_ttl_rounds=2, **kw)
         return sorted(
@@ -89,17 +88,14 @@ def test_ttl_with_bloom_backend_same_semantics(spark, tmp_path):
             .select("url_norm", "depth").collect()
         )
 
-    assert crawled("bl", use_bloom=True) == \
-        crawled("ck", use_bloom=True, seen_filter="cuckoo") == \
-        crawled("off", use_bloom=False)
+    assert crawled("bl") == crawled("off", use_bloom=False)
 
 
 def test_ttl_resume_after_kill(spark, tmp_path):
     corpus = fakeshop_spark_df(spark, n_sites=1, n_categories=3,
                                n_subcats=2, n_products=2)
     cfg = CrawlConfig(max_depth=4, n_shards=4, bloom_sync_rounds=1,
-                      bloom_min_seen=5, seen_ttl_rounds=2,
-                      use_bloom=True, seen_filter="cuckoo")
+                      bloom_min_seen=5, seen_ttl_rounds=2)
 
     import dataclasses
 
@@ -125,9 +121,8 @@ def test_ttl_resume_after_kill(spark, tmp_path):
 
 def test_ttl_with_lagged_sync_stays_exact(spark, tmp_path):
     """With bloom_sync_rounds > 1 the filter lags the seen table, so
-    TTL expiry sees dirs whose hashes were never inserted; deleting
-    those could strip a live key's colliding fingerprint (a false
-    negative). The delete is restricted to synced rounds — the crawled
+    TTL expiry drops dirs whose hashes were never inserted while the
+    unsynced-delta anti-join still covers the live ones — the crawled
     multiset must equal the filter-free run's under the same ttl."""
     def crawled(subdir, **kw):
         eng = _crawl(spark, tmp_path, subdir, seen_ttl_rounds=1,
@@ -138,5 +133,4 @@ def test_ttl_with_lagged_sync_stays_exact(spark, tmp_path):
             .select("url_norm", "depth").collect()
         )
 
-    assert crawled("lagck", use_bloom=True, seen_filter="cuckoo") == \
-        crawled("lagoff", use_bloom=False)
+    assert crawled("lagbl") == crawled("lagoff", use_bloom=False)

@@ -1,32 +1,24 @@
-"""Seen-set scale stress: bloom + cuckoo at up to 10^9 keys.
+"""Seen-set scale stress: the bloom filter at up to 10^9 keys.
 
 VERDICT r4 #5: the seen-set evidence topped out at 10^8 candidates /
 1 GB of bloom shards; the engine's 10^10-URL claim rests on shard-count
-scaling being a pure config. This tool builds BOTH backends at N keys
-(default 10^9) with n_shards scaled to keep per-shard blobs in the tens
-of MB, and reports, per backend:
+scaling being a pure config. This tool builds the bloom seen-set at N
+keys (default 10^9) with n_shards scaled to keep per-shard blobs in the
+tens of MB, and reports:
 
   - build wall + keys/s, shard count, total/max shard MB
   - probe wall on 1M DISJOINT keys -> measured FP rate
   - probe wall on 1M PRESENT keys  -> false-negative count (must be 0)
-  - cuckoo only: a TTL-expiry delete wave (delete_pct% of the keyset as
-    a delta, engine/cuckoo.py delete_hashes), then re-probe:
-      * deleted sample  -> residual hit rate (shielding sentinels + FP
-        only; must collapse toward the FP floor)
-      * remaining sample -> false negatives (must be 0 — deletion can
-        never evict another key's membership)
-    plus stash totals before/after (compaction bounded, ADVICE r4).
 
 Everything is executor-side: keys come from spark.range, shard blobs
 are built/merged/probed in applyInPandas/cogroup tasks; the driver only
 ever sees per-shard byte counts and scalar aggregates.
 
 Usage:
-  python tools/seen_scale_stress.py [N] [n_shards] [cpus] \
-      [backend: bloom|cuckoo|both] [delete_pct]
-Defaults: 1_000_000_000 256 $SPARK_GRAFT_CPUS|32 both 10
+  python tools/seen_scale_stress.py [N] [n_shards] [cpus]
+Defaults: 1_000_000_000 256 $SPARK_GRAFT_CPUS|32
 
-Prints one JSON line per backend (BENCH.md quotes them).
+Prints one JSON line (BENCH.md quotes it).
 """
 
 from __future__ import annotations
@@ -53,12 +45,9 @@ def key_hashes(spark, lo: int, hi: int, width: int, stride: int = 1):
     return ids.select(F.xxhash64(url).alias("url_hash"))
 
 
-def shard_stats(filt, spark, blob_cols) -> dict:
+def shard_stats(filt, spark) -> dict:
     rows = filt.table.read(spark).select(
-        "shard_id",
-        sum((F.octet_length(c) for c in blob_cols[1:]),
-            F.octet_length(blob_cols[0])).alias("bytes"),
-    ).collect()
+        "shard_id", F.octet_length("bloom").alias("bytes")).collect()
     return {
         "shards": len(rows),
         "total_mb": round(sum(r.bytes for r in rows) / 2**20, 1),
@@ -72,9 +61,8 @@ def timed_probe(filt, spark, probe_df) -> tuple[int, float]:
     return hits, time.monotonic() - t0
 
 
-def run_backend(spark, name: str, filt, blob_cols, n: int, width: int,
-                delete_pct: int, headroom: float) -> dict:
-    report: dict = {"metric": f"seen_scale_stress_{name}", "n_keys": n,
+def run_bloom(spark, filt, n: int, width: int, headroom: float) -> dict:
+    report: dict = {"metric": "seen_scale_stress_bloom", "n_keys": n,
                     "n_shards": filt.n_shards, "cpus": width,
                     "headroom": headroom}
     keys = key_hashes(spark, 0, n, width)
@@ -88,7 +76,7 @@ def run_backend(spark, name: str, filt, blob_cols, n: int, width: int,
     report["load_factor"] = round(n / filt.capacity(), 3)
     report["build_wall_s"] = round(build_s, 1)
     report["build_keys_per_s"] = int(n / build_s)
-    report.update(shard_stats(filt, spark, blob_cols))
+    report.update(shard_stats(filt, spark))
 
     # disjoint probe: ids shifted past n -> every hit is a false positive
     fp_hits, fp_s = timed_probe(
@@ -105,52 +93,6 @@ def run_backend(spark, name: str, filt, blob_cols, n: int, width: int,
     report["present_probe_wall_s"] = round(pres_s, 1)
     report["false_negatives"] = n_present - pres_hits
 
-    if name == "cuckoo" and delete_pct > 0:
-        stash0 = filt.table.read(spark).agg(
-            F.sum(F.octet_length("stash") / 8).alias("s"),
-            F.sum("n_items").alias("n")).first()
-        # TTL wave: expire ids with id % 100 < delete_pct (delta-shaped,
-        # exactly what seen-TTL recrawl hands delete_hashes)
-        doomed = (spark.range(n).repartition(width)
-                  .where(F.col("id") % 100 < delete_pct))
-        doomed_keys = doomed.select(F.xxhash64(F.format_string(
-            "https://site%d.example.com/page/%d",
-            F.col("id") % 200003, F.col("id"))).alias("url_hash"))
-        n_doomed = doomed_keys.count()
-        t0 = time.monotonic()
-        filt.delete_hashes(spark, doomed_keys)
-        del_s = time.monotonic() - t0
-        report["delete_n"] = n_doomed
-        report["delete_wall_s"] = round(del_s, 1)
-        report["delete_keys_per_s"] = int(n_doomed / del_s)
-        stash1 = filt.table.read(spark).agg(
-            F.sum(F.octet_length("stash") / 8).alias("s"),
-            F.sum("n_items").alias("n")).first()
-        report["stash_entries_before"] = int(stash0["s"] or 0)
-        report["stash_entries_after"] = int(stash1["s"] or 0)
-        report["n_items_after"] = int(stash1["n"] or 0)
-
-        # post-delete samples use a stride NOT aligned with the doom
-        # pattern (a multiple-of-100 stride lands every sampled id in
-        # id%100<delete_pct, leaving the remaining-keys check vacuous)
-        pd_stride = stride + 1 if stride % 100 == 0 else stride
-        # deleted sample: hits now = FP floor + stash shielding only
-        del_sample = key_hashes(spark, 0, n, width, stride=pd_stride).join(
-            doomed_keys, "url_hash", "left_semi")
-        n_del_sample = del_sample.count()
-        dhits, _ = timed_probe(filt, spark, del_sample)
-        report["deleted_sample_n"] = n_del_sample
-        report["deleted_sample_hit_rate"] = round(
-            dhits / max(1, n_del_sample), 6)
-
-        # remaining sample: deletion must not create false negatives
-        remaining = key_hashes(spark, 0, n, width, stride=pd_stride).join(
-            doomed_keys, "url_hash", "left_anti")
-        n_rem = remaining.count()
-        rhits, _ = timed_probe(filt, spark, remaining)
-        report["remaining_sample_n"] = n_rem
-        report["post_delete_false_negatives"] = n_rem - rhits
-
     return report
 
 
@@ -159,11 +101,8 @@ def main() -> None:
     n_shards = int(sys.argv[2]) if len(sys.argv) > 2 else 256
     cpus = sys.argv[3] if len(sys.argv) > 3 else os.environ.get(
         "SPARK_GRAFT_CPUS", "32")
-    backend = sys.argv[4] if len(sys.argv) > 4 else "both"
-    delete_pct = int(sys.argv[5]) if len(sys.argv) > 5 else 10
 
     from crawl4ai_spark.engine.bloom import BloomSeenSet
-    from crawl4ai_spark.engine.cuckoo import CuckooSeenSet
     from crawl4ai_spark.engine.tables import Warehouse
     from crawl4ai_spark.session import build_session
 
@@ -174,16 +113,9 @@ def main() -> None:
     width = int(cpus)
     wh = Warehouse(tempfile.mkdtemp(prefix="c4as_seen_stress_"))
 
-    if backend in ("bloom", "both"):
-        filt = BloomSeenSet(wh.table("seen_bloom"), n_shards=n_shards)
-        print(json.dumps(run_backend(
-            spark, "bloom", filt, ["bloom"], n, width, 0,
-            headroom=1.5)), flush=True)
-    if backend in ("cuckoo", "both"):
-        filt = CuckooSeenSet(wh.table("seen_cuckoo"), n_shards=n_shards)
-        print(json.dumps(run_backend(
-            spark, "cuckoo", filt, ["table", "stash"], n, width,
-            delete_pct, headroom=1.05)), flush=True)
+    filt = BloomSeenSet(wh.table("seen_bloom"), n_shards=n_shards)
+    print(json.dumps(run_bloom(spark, filt, n, width, headroom=1.5)),
+          flush=True)
     spark.stop()
 
 
